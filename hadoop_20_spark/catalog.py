@@ -9,13 +9,31 @@ key/value-class metadata, upgraded to full column schemas.
 
 Tables (TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings.
+
+Schema cache: ``load_table`` infers a parquet schema once per table
+version, not once per call (inference is a Spark job of ~0.1 CPU-s; a
+repeated read with the cached schema starts none).  A table version is
+what ``files_version`` says it is: the absolute path plus the sorted
+``(relpath, size, mtime_ns)`` of every file under it, so a table rewritten
+at the same path misses the cache.  Only local and ``file:`` paths are
+cached; any other scheme keeps per-call inference.  The cache holds at
+most ``_SCHEMA_CACHE_MAX`` schemas (least recently used evicted) behind
+one lock, so concurrent callers on one session share it safely.  It is
+module-level state on a query path, which ROADMAP aims 2 and 5 otherwise
+rule out.  It stays because a schema is a pure function of the files it
+is keyed by: a hit can never return another version's schema, so sharing
+entries across callers and sessions is as safe as recomputing them.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -42,6 +60,63 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def files_version(paths) -> tuple | None:
+    """The version of the data under ``paths`` (files or directories):
+    per path, its absolute form and the sorted ``(relpath, size,
+    mtime_ns)`` of every file under it.  ``None`` when a path is not
+    local (a scheme other than ``file:``) or does not exist, i.e. when
+    the version cannot be told and nothing may be cached against it."""
+    out = []
+    for p in paths:
+        u = urlparse(p)
+        if u.scheme not in ("", "file"):
+            return None
+        root = os.path.abspath(unquote(u.path) if u.scheme else p)
+        try:
+            st = os.stat(root)
+        except OSError:
+            return None
+        if not os.path.isdir(root):
+            out.append((root, (("", st.st_size, st.st_mtime_ns),)))
+            continue
+        files = []
+        for d, _, names in os.walk(root):
+            for n in names:
+                f = os.path.join(d, n)
+                try:
+                    st = os.stat(f)
+                except OSError:
+                    return None
+                files.append((os.path.relpath(f, root), st.st_size, st.st_mtime_ns))
+        out.append((root, tuple(sorted(files))))
+    return tuple(out)
+
+
+_SCHEMA_CACHE: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMA_CACHE_MAX = 256
+_SCHEMA_LOCK = threading.Lock()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    table version (see the module docstring)."""
+    key = files_version([path])
+    if key is None:
+        return spark.read.parquet(path)
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_CACHE.get(key)
+        if schema is not None:
+            _SCHEMA_CACHE.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMA_LOCK:
+        _SCHEMA_CACHE[key] = df.schema
+        if len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
+            _SCHEMA_CACHE.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Read one fixture table.
 
@@ -64,13 +139,13 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         # to microseconds (the same floor DuckDB/pyarrow apply when
         # down-converting), keeping the public schema `ts: timestamp`.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir or DEFAULT_SF_DIR, name))
+        df = _read_parquet(spark, table_path(sf_dir or DEFAULT_SF_DIR, name))
         if dict(df.dtypes).get("ts") == "bigint":
             from pyspark.sql import functions as F
 
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(table_path(sf_dir or DEFAULT_SF_DIR, name))
+    return _read_parquet(spark, table_path(sf_dir or DEFAULT_SF_DIR, name))
 
 
 def load_tables(

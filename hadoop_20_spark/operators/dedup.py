@@ -6,7 +6,7 @@ Reference analogs: the distinct idiom (SURVEY §2.5), MD5Hash
 (MinHash-LSH, SimHash, n-gram Jaccard) is new surface, built
 Spark-first:
 
-- signatures are pure Column expressions (codegen; no UDFs, no shuffle);
+- signatures are pure built-in expressions (codegen; no UDFs, no shuffle);
 - candidate generation is a band-bucket shuffle (groupBy band signature),
   the standard LSH trick that avoids the O(n²) all-pairs join;
 - verification joins only candidate pairs.
@@ -28,7 +28,6 @@ from hadoop_20_spark.functions import (
     MERSENNE31,
     ensure_parallelism,
     hash_coeffs,
-    let,
     md5_long,
     tokens,
 )
@@ -54,26 +53,37 @@ def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
 
 
 # --- minhash ----------------------------------------------------------------
+#
+# The MinHash, LSH-banding and paragraph-dedup plans are built as SQL
+# expression strings: one parse per expression instead of py4j round
+# trips per Column node (a single ``F.col`` costs ~13), which took a
+# ``minhash_lsh_candidates`` build from ~2,400 round trips to ~70 and a
+# ``paragraph_dedup`` build from ~650 to ~100.  Caller-supplied column
+# names are quoted with ``_ident``; lambda variables are ``__``-prefixed
+# so they never shadow a column.
 
-def shingle_hashes(col: Column | str, shingle: int = 3) -> Column:
-    """Base hash array: md5_long(shingle) mod 2^31-1 per word-shingle.
-    The ONE expensive (md5) pass; all k minhash functions derive from it
-    with two multiplications — the universal-hashing construction of
-    Broder's minwise permutations (one hash per element, k cheap
-    (a·h+b) mod p rehashes), which cuts signature cost k-fold."""
-    # token array let-bound once per row (lambda-CSE rule, SCALE.md):
-    # referencing the tokens() expression from the per-position slice
-    # lambda would re-tokenize per shingle position
-    sh = let(
-        tokens(col),
-        lambda t: F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(t) - shingle + 1, F.lit(1))),
-            lambda i: F.array_join(F.slice(t, i, shingle), " "),
-        ),
+def _ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str_lit(s: str) -> str:
+    """A Python string as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _shingles_sql(text: str, shingle: int) -> str:
+    """Word ``shingle``-grams of column ``text`` (whitespace tokens, empty
+    tokens dropped), at least one per row.  The token array is let-bound
+    once per row (``transform(array(e), v -> body)[0]``, the lambda-CSE
+    rule of ``functions.let``): referencing the tokenizer from the
+    per-position lambda would re-tokenize per shingle position."""
+    toks = rf"filter(split({_ident(text)}, '\\s+'), __w -> __w != '')"
+    return (
+        f"transform(array({toks}), __t -> transform("
+        f"sequence(1, greatest(size(__t) - {shingle} + 1, 1)), "
+        f"__i -> array_join(slice(__t, __i, {shingle}), ' ')))[0]"
     )
-    # NB: single-parameter lambdas only — pyspark dispatches two-parameter
-    # lambdas as (element, index), silently rebinding default-arg closures.
-    return F.transform(sh, lambda s: md5_long(s) % MERSENNE31)
 
 
 def minhash_signatures(
@@ -81,26 +91,53 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-doc MinHash signature table ``(id, mh0..mh{k-1})`` —
     deterministic and oracle-checkable (hash_coeffs reproduces the family
-    in any engine).  Two-phase select so the md5 pass runs once, not k×.
+    in any engine).
+
+    Two-phase select so the md5 pass runs once, not k×: the base hash
+    array is ``md5_long(shingle) mod 2^31-1`` per word-shingle, and all k
+    minhash functions derive from it with two multiplications — the
+    universal-hashing construction of Broder's minwise permutations (one
+    hash per element, k cheap (a·h+b) mod p rehashes), which cuts
+    signature cost k-fold.
 
     The signature pass is CPU-bound (md5 per shingle) with lambda
     subtrees Spark's subexpression elimination skips, so parallelism
     must not be hostage to the input split count — ``ensure_parallelism``
     round-robins small inputs across all cores (no-op at scale)."""
-    hs = ensure_parallelism(df).select(
-        F.col(id_col), shingle_hashes(text_col, shingle).alias("_hs")
+    idq = _ident(id_col)
+    hs = ensure_parallelism(df).selectExpr(
+        idq,
+        f"transform({_shingles_sql(text_col, shingle)}, "
+        f"__s -> CAST(conv(substring(md5(__s), 1, 15), 16, 10) AS BIGINT)"
+        f" % {MERSENNE31}) AS _hs",
     )
-
-    def rehash(a: int, b: int):
-        return lambda h: (h * a + F.lit(b)) % MERSENNE31
-
-    return hs.select(
-        F.col(id_col),
+    return hs.selectExpr(
+        idq,
         *[
-            F.array_min(F.transform(F.col("_hs"), rehash(a, b))).alias(f"mh{i}")
+            f"array_min(transform(_hs, __h -> (__h * {a} + {b}) % {MERSENNE31})) AS mh{i}"
             for i, (a, b) in enumerate(hash_coeffs(num_hashes))
         ],
     )
+
+
+def _band_keys(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, bands: int, shingle: int
+) -> DataFrame:
+    """``(id, band_key)``: one row per document and band, ``band_key`` =
+    ``struct(band, h0..h{k/bands-1})`` — the band's slice of the MinHash
+    signature, tagged with its band number."""
+    rows_per_band = num_hashes // bands
+    keys = ", ".join(
+        "named_struct('band', {}, {})".format(
+            b,
+            ", ".join(
+                f"'h{r}', mh{b * rows_per_band + r}" for r in range(rows_per_band)
+            ),
+        )
+        for b in range(bands)
+    )
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle)
+    return sig.selectExpr(_ident(id_col), f"explode(array({keys})) AS band_key")
 
 
 def minhash_lsh_candidates(
@@ -121,40 +158,21 @@ def minhash_lsh_candidates(
     skew-salting; dropped buckets are reported upstream rather than
     silently exploding into O(b²) pairs at 100 TB.
     """
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            *[F.col(f"mh{b * rows_per_band + r}").alias(f"h{r}") for r in range(rows_per_band)],
-        )
-        for b in range(bands)
-    ]
-    exploded = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band_key")
+    buckets = (
+        _band_keys(df, id_col, text_col, num_hashes, bands, shingle)
+        .groupBy("band_key")
+        .agg(F.expr(f"sort_array(collect_list({_ident(id_col)})) AS ids"))
     )
-    buckets = exploded.groupBy("band_key").agg(
-        F.sort_array(F.collect_list(id_col)).alias("ids")
-    )
-    pairs = (
-        buckets.filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("ids"), i + 2, F.size("ids")),
-                            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-                        ),
-                    )
-                )
-            ).alias("p")
+    return (
+        buckets.where(f"size(ids) >= 2 AND size(ids) <= {max_bucket}")
+        .selectExpr(
+            "explode(flatten(transform(ids, (__a, __i) -> transform("
+            "slice(ids, __i + 2, size(ids)), "
+            "__b -> named_struct('id_a', __a, 'id_b', __b))))) AS p"
         )
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        .selectExpr("p.id_a AS id_a", "p.id_b AS id_b")
         .distinct()
     )
-    return pairs
 
 
 def lsh_bucket_stats(
@@ -171,42 +189,30 @@ def lsh_bucket_stats(
     DROP as degenerate.  SCALE.md's contract is that capped drops are
     observable, not silent — run this beside ``minhash_lsh_candidates``
     with the same parameters and alert on ``n_dropped_buckets``."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            *[F.col(f"mh{b * rows_per_band + r}").alias(f"h{r}") for r in range(rows_per_band)],
-        )
-        for b in range(bands)
-    ]
-    exploded = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band_key")
+    sizes = (
+        _band_keys(df, id_col, text_col, num_hashes, bands, shingle)
+        .groupBy("band_key")
+        .agg(F.expr("count(1) AS sz"))
     )
-    sizes = exploded.groupBy("band_key").agg(F.count(F.lit(1)).alias("sz"))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.when(F.col("sz") >= 2, 1).otherwise(0)).cast("long").alias("n_candidate_buckets"),
-        F.sum(F.when(F.col("sz") > max_bucket, 1).otherwise(0)).cast("long").alias("n_dropped_buckets"),
-        F.sum(F.when(F.col("sz") > max_bucket, F.col("sz")).otherwise(0)).cast("long").alias("n_dropped_ids"),
-        F.max("sz").alias("max_bucket_size"),
+    return sizes.selectExpr(
+        "count(1) AS n_buckets",
+        "CAST(sum(CASE WHEN sz >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_candidate_buckets",
+        f"CAST(sum(CASE WHEN sz > {max_bucket} THEN 1 ELSE 0 END) AS BIGINT)"
+        " AS n_dropped_buckets",
+        f"CAST(sum(CASE WHEN sz > {max_bucket} THEN sz ELSE 0 END) AS BIGINT)"
+        " AS n_dropped_ids",
+        "max(sz) AS max_bucket_size",
     )
 
 
 # --- n-gram / token Jaccard (exact verify) ----------------------------------
 
 def _shingle_col(text_col: str, shingle: int) -> Column:
-    t = tokens(text_col)
+    """Whitespace tokens of ``text_col`` (``shingle`` = 1) or its word
+    ``shingle``-grams."""
     if shingle > 1:
-        # let-bound: same lambda-CSE fix as shingle_hashes
-        t = let(
-            tokens(text_col),
-            lambda tk: F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(tk) - shingle + 1, F.lit(1))),
-                lambda i: F.array_join(F.slice(tk, i, shingle), " "),
-            ),
-        )
-    return t
+        return F.expr(_shingles_sql(text_col, shingle))
+    return tokens(text_col)
 
 
 def _shingle_postings(df: DataFrame, id_col: str, text_col: str, shingle: int) -> DataFrame:
@@ -946,34 +952,27 @@ def segment_paragraphs(
 
     Reference analog: the record-boundary scan of TextInputFormat
     (``mapred/LineRecordReader.java``) applied below document
-    granularity.  Pure Column codegen; no shuffle, no UDF."""
+    granularity.  Pure codegen expressions; no shuffle, no UDF."""
     if (delimiter_regex is None) == (block_words is None):
         raise ValueError("choose exactly one of delimiter_regex / block_words")
+    text = _ident(text_col)
     if delimiter_regex is not None:
         return (
-            df.select(
+            df.selectExpr(
                 "*",
-                F.posexplode(F.split(F.col(text_col), delimiter_regex)).alias(
-                    "pno", "para"
-                ),
+                f"posexplode(split({text}, {_str_lit(delimiter_regex)})) AS (pno, para)",
             )
-            .where(F.trim(F.col("para")) != "")
+            .where("trim(para) != ''")
             .drop(text_col)
         )
     w = block_words
     return (
-        df.withColumn("__words", F.split(F.col(text_col), " "))
-        .withColumn("__nb", F.expr(f"(size(__words) + {w - 1}) DIV {w}"))
-        .select(
-            "*", F.explode(F.sequence(F.lit(0), F.col("__nb") - 1)).alias("pno")
+        df.selectExpr("*", f"split({text}, ' ') AS __words")
+        .selectExpr(
+            "*", f"explode(sequence(0, (size(__words) + {w - 1}) DIV {w} - 1)) AS pno"
         )
-        .select(
-            "*",
-            F.array_join(
-                F.slice(F.col("__words"), F.col("pno") * w + 1, w), " "
-            ).alias("para"),
-        )
-        .drop("__words", "__nb", text_col)
+        .selectExpr("*", f"array_join(slice(__words, pno * {w} + 1, {w}), ' ') AS para")
+        .drop("__words", text_col)
     )
 
 
@@ -1029,44 +1028,26 @@ def paragraph_dedup(
         delimiter_regex=delimiter_regex,
         block_words=block_words,
     )
-    norm = F.lower(F.trim(F.regexp_replace(F.col("para"), r"\s+", " ")))
-    pk = (
-        F.when(
-            F.col("pno") < F.lit(1 << pos_bits),
-            F.col(id_col).cast("long") * F.lit(1 << pos_bits) + F.col("pno"),
-        )
-        .otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("paragraph_dedup: pno >= 2^pos_bits ("),
-                    F.col("pno").cast("string"),
-                    F.lit(f" >= {1 << pos_bits}); raise pos_bits"),
-                )
-            ).cast("long")
-        )
-    )
-    keyed = paras.select(
+    lim = 1 << pos_bits
+    keyed = paras.selectExpr(
         "*",
-        F.md5(norm).alias("para_md5"),
-        pk.alias("__pk"),
+        r"md5(lower(trim(regexp_replace(para, '\\s+', ' ')))) AS para_md5",
+        f"CASE WHEN pno < {lim} THEN CAST({_ident(id_col)} AS BIGINT) * {lim} + pno"
+        " ELSE CAST(raise_error(concat('paragraph_dedup: pno >= 2^pos_bits (', "
+        f"CAST(pno AS STRING), ' >= {lim}); raise pos_bits')) AS BIGINT) END AS __pk",
     )
-    firsts = keyed.groupBy("para_md5").agg(F.min("__pk").alias("__first_pk"))
-    marked = keyed.join(firsts, "para_md5").withColumn(
-        "__kept", F.col("__pk") == F.col("__first_pk")
+    firsts = keyed.groupBy("para_md5").agg(F.expr("min(__pk) AS __first_pk"))
+    marked = keyed.join(firsts, "para_md5").selectExpr(
+        "*", "__pk = __first_pk AS __kept"
     )
     return marked.groupBy(id_col, *carry_cols).agg(
-        F.count(F.lit(1)).alias("n_paras"),
-        F.sum((~F.col("__kept")).cast("int")).alias("n_paras_removed"),
-        F.array_join(
-            F.transform(
-                F.filter(
-                    F.array_sort(F.collect_list(F.struct("pno", "para", "__kept"))),
-                    lambda x: x["__kept"],
-                ),
-                lambda x: x["para"],
-            ),
-            joiner,
-        ).alias("text_dedup"),
+        F.expr("count(1) AS n_paras"),
+        F.expr("sum(CAST(NOT __kept AS INT)) AS n_paras_removed"),
+        F.expr(
+            "array_join(transform(filter(array_sort(collect_list("
+            "struct(pno, para, __kept))), __x -> __x.__kept), __x -> __x.para), "
+            f"{_str_lit(joiner)}) AS text_dedup"
+        ),
     )
 
 

@@ -1818,17 +1818,22 @@ def paragraph_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = dedup.paragraph_dedup(
         docs, "doc_id", "text", block_words=8, carry_cols=("source", "n_chars")
     )
+    # SQL expression strings: one parse each instead of a py4j round
+    # trip per Column node (see operators/dedup.py)
     return (
         per_doc.groupBy("source")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum((F.col("n_paras_removed") > 0).cast("int"))
-            .cast("long")
-            .alias("n_docs_changed"),
-            F.sum("n_paras").cast("long").alias("n_paras"),
-            F.sum("n_paras_removed").cast("long").alias("n_paras_removed"),
-            F.sum("n_chars").cast("long").alias("chars_before"),
-            F.sum(F.length("text_dedup")).cast("long").alias("chars_after"),
+            *(
+                F.expr(e)
+                for e in (
+                    "CAST(count(1) AS BIGINT) AS n_docs",
+                    "CAST(sum(CAST(n_paras_removed > 0 AS INT)) AS BIGINT) AS n_docs_changed",
+                    "CAST(sum(n_paras) AS BIGINT) AS n_paras",
+                    "CAST(sum(n_paras_removed) AS BIGINT) AS n_paras_removed",
+                    "CAST(sum(n_chars) AS BIGINT) AS chars_before",
+                    "CAST(sum(length(text_dedup)) AS BIGINT) AS chars_after",
+                )
+            )
         )
         .orderBy("source")
     )

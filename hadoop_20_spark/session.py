@@ -15,6 +15,12 @@ Scale posture (100 TB design point, even though tests run local):
 - Arrow enabled for the Pandas-UDF slow path.
 - session timezone pinned UTC so results are comparable with the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
+- generated-code cache sized to the working set (``CODEGEN_CACHE_ENTRIES``)
+  so a repeated query reuses its compiled classes instead of recompiling
+  them: Spark's default of 100 is below the ~130 distinct classes one
+  pass of either benchmark workload uses; the driver JVM's JIT code
+  cache (``JIT_CODE_CACHE``) is pinned for the same reason, so compiled
+  methods are not flushed and recompiled between passes.
 """
 
 from __future__ import annotations
@@ -24,6 +30,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+
+#: ``spark.sql.codegen.cache.maxEntries``; sized in ``get_spark``
+CODEGEN_CACHE_ENTRIES = 1000
+
+#: the driver JVM's ``-XX:ReservedCodeCacheSize``; sized in ``get_spark``
+JIT_CODE_CACHE = "240m"
 
 
 def get_spark(
@@ -61,6 +73,27 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # Spark's generated-class cache (default 100 entries) is smaller
+        # than one steady-state pass: llm_curation uses ~133 distinct
+        # classes and warehouse_etl ~126 (2.2 KB of bytecode on average,
+        # 14 KB max), so at 100 each repeated pass recompiled ~122 and ~57
+        # classes at 9-12 ms apiece under C1.  1000 is ~4x the two
+        # workloads' combined ~260 classes.  A static conf: it takes effect
+        # when the JVM's first session starts, and every session in that
+        # JVM shares the cache.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # The JIT's code cache must hold those classes' compiled methods
+        # too.  A JDK 17 JVM with its tiers capped (-XX:TieredStopAtLevel=1,
+        # C1 only) sizes the cache at 48 MB, which ~10 passes of
+        # llm_curation fill (~46 MB); the sweeper then flushes half of it
+        # and the next passes spend 2-4x the JIT CPU recompiling the same
+        # methods.  240 MB is the JVM's own size with all tiers on.
+        # Default options: a caller's spark.driver.extraJavaOptions is
+        # appended after them and wins.
+        .config(
+            "spark.driver.defaultJavaOptions",
+            f"-XX:ReservedCodeCacheSize={JIT_CODE_CACHE}",
+        )
         # bucketed-table warehouse kept out of the repo tree
         .config(
             "spark.sql.warehouse.dir",

@@ -23,3 +23,25 @@ def tables(spark):
     names = ("region", "nation", "customer", "supplier", "orders", "lineitem",
              "events", "documents", "embeddings")
     return {n: load_table(spark, n, SF_DIR).cache() for n in names}
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: run ``fn`` under a fresh job group and return
+    ``(fn's result, number of Spark jobs it started)``."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        # job-start events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -298,7 +298,7 @@ def test_cosine_topk_guard_count_is_memoized(spark, tables):
     emb = tables["embeddings"].select("vec_id", "embedding")
     small = emb.filter(F.col("vec_id") < 5)
     similarity.cosine_topk(emb, small, k=2).count()
-    key = small._jdf.queryExecution().analyzed().semanticHash()
+    key = similarity._plan_key(small)
     assert similarity._QUERY_COUNT_MEMO.get(key) == small.count()
     try:
         similarity._QUERY_COUNT_MEMO[key] = 10**9
@@ -306,6 +306,39 @@ def test_cosine_topk_guard_count_is_memoized(spark, tables):
             similarity.cosine_topk(emb, small, k=2)
     finally:
         similarity._QUERY_COUNT_MEMO.pop(key, None)
+
+
+def test_cosine_topk_guard_recounts_rewritten_table(spark, tmp_path):
+    """A table rewritten at the same path has the same analyzed plan
+    (same semanticHash) but new files: the memoized guard count must
+    not outlive the old version, or the designed raise silently turns
+    off (5 query rows memoized, then 20 rows read under a cap of 10)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from hadoop_20_spark import catalog
+
+    def write(n):
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array(range(n), pa.int64()),
+                    "embedding": [[1.0, float(i)] for i in range(n)],
+                }
+            ),
+            tmp_path / "embeddings.parquet",
+        )
+
+    def topk():
+        emb = catalog.load_table(spark, "embeddings", str(tmp_path))
+        return similarity.cosine_topk(emb, emb, k=2, max_broadcast_queries=10)
+
+    write(5)
+    assert topk().count() == 10
+    write(20)
+    with pytest.raises(ValueError, match="query vectors exceed"):
+        topk()
 
 
 def test_srp_volume_guard_passes_fixture_scale(spark, tables):
@@ -812,6 +845,24 @@ def test_segment_paragraphs_block_mode_shapes(spark):
         df, "doc_id", "text", block_words=2
     ).orderBy("pno").collect()
     assert [r["para"] for r in rows] == ["a b", "c d", "e"]
+
+
+def test_sql_built_operators_quote_column_names(spark, tables):
+    """The MinHash and paragraph-dedup plans are SQL expression strings:
+    caller column names that are not plain identifiers (a space, a
+    backtick) must give the same rows as plain names."""
+    docs = tables["documents"].select("doc_id", "text")
+    odd = docs.toDF("doc id", "te`xt")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(dedup.minhash_lsh_candidates(odd, "doc id", "te`xt", max_bucket=3)) == rows(
+        dedup.minhash_lsh_candidates(docs, "doc_id", "text", max_bucket=3)
+    )
+    assert rows(dedup.paragraph_dedup(odd, "doc id", "te`xt", block_words=4)) == rows(
+        dedup.paragraph_dedup(docs, "doc_id", "text", block_words=4)
+    )
 
 
 def test_duplicate_spans_planted(spark):
