@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hadoop_20_spark.session import batch_shuffle_partitions
+
 
 def total_order_sort(df: DataFrame, *cols: str | Column) -> DataFrame:
     """ex/Sort.java + ex/terasort/TeraSort.java — globally ordered output.
@@ -237,7 +239,7 @@ def distributed_global_rank(
     lead = keys[0]
     spark = df.sparkSession
     if num_buckets is None:
-        num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        num_buckets = batch_shuffle_partitions(spark)
 
     df = df.persist()
     probs = [i / num_buckets for i in range(1, num_buckets)]
@@ -356,7 +358,7 @@ def distributed_global_rank_sampled(
 
     spark = df.sparkSession
     if num_buckets is None:
-        num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        num_buckets = batch_shuffle_partitions(spark)
 
     df = df.persist()
     n = df.count()
@@ -451,7 +453,7 @@ def distributed_cumsum(
     lead = keys[0]
     spark = df.sparkSession
     if num_buckets is None:
-        num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        num_buckets = batch_shuffle_partitions(spark)
 
     df = df.persist()
     probs = [i / num_buckets for i in range(1, num_buckets)]

@@ -10,8 +10,22 @@ Scale posture (100 TB design point, even though tests run local):
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
   — subsumes the reference's manual salting / reducer-count tuning
   (``mapred.reduce.tasks``).
-- shuffle partitions sized to the local core count for tests; on a real
-  cluster AQE's coalescing makes the initial number a ceiling, not a fix.
+- two shuffle widths, one per kind of query:
+  - batch plans take theirs from
+    ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``, sized
+    to the local core count; on a real cluster AQE's coalescing makes
+    that initial number a ceiling, not a fix.  Spark reads it in place
+    of ``spark.sql.shuffle.partitions`` whenever AQE and coalescing are
+    on, as they always are here (:func:`batch_shuffle_partitions`).
+  - stateful streams take ``spark.sql.shuffle.partitions``, set to
+    ``STATE_PARTITIONS_MIN``: Structured Streaming turns AQE off in the
+    session it clones at ``.start()`` and sizes its state stores from
+    this conf.  The state width is written into the checkpoint's offset
+    log and fixed for the checkpoint's life, and every store pays a
+    commit on every micro-batch, data or not, so it starts at the floor
+    of the input-sized rule (``streaming.adaptive_state_partitions``),
+    not at the core count.  Batch work inside a ``foreachBatch``
+    callback also runs with AQE off, at this width.
 - Arrow enabled for the Pandas-UDF slow path.
 - session timezone pinned UTC so results are comparable with the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
@@ -37,6 +51,30 @@ CODEGEN_CACHE_ENTRIES = 1000
 #: the driver JVM's ``-XX:ReservedCodeCacheSize``; sized in ``get_spark``
 JIT_CODE_CACHE = "240m"
 
+#: state stores per stateful streaming operator: the session's
+#: ``spark.sql.shuffle.partitions`` and the floor of
+#: ``streaming.adaptive_state_partitions``
+STATE_PARTITIONS_MIN = 4
+
+
+def batch_shuffle_partitions(spark: SparkSession) -> int:
+    """The shuffle width batch plans get on ``spark``, by Spark's own rule
+    (``SQLConf.numShufflePartitions``): AQE's initial partition number
+    when AQE and its coalescing are on and it is set, otherwise
+    ``spark.sql.shuffle.partitions``."""
+    conf = spark.conf
+
+    def on(key: str) -> bool:
+        return conf.get(key).strip().lower() == "true"
+
+    if on("spark.sql.adaptive.enabled") and on(
+        "spark.sql.adaptive.coalescePartitions.enabled"
+    ):
+        initial = conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+        if initial:
+            return int(initial)
+    return int(conf.get("spark.sql.shuffle.partitions"))
+
 
 def get_spark(
     app_name: str = "hadoop_20_spark",
@@ -50,9 +88,15 @@ def get_spark(
     settings here are engine-level, not per-query: Catalyst owns the
     per-query physical choices the reference forced users to hand-pick
     (combiner? broadcast? reducer count? total-order sampling?).
+
+    ``shuffle_partitions`` is the batch width (AQE's initial partition
+    number).  New stateful streams get ``STATE_PARTITIONS_MIN`` state
+    stores instead (``spark.sql.shuffle.partitions``; see the module
+    docstring); a stream restarted from an existing checkpoint keeps the
+    width recorded there.  ``extra_conf`` can override either conf.
     """
     master = master or f"local[{DEFAULT_CPUS}]"
-    # local[N] => one JVM; N concurrent tasks. Shuffle partitions default
+    # local[N] => one JVM; N concurrent tasks. The batch width defaults
     # to core count: fewer wastes cores, more adds scheduling overhead at
     # test scale. At 100 TB you would raise this (or let AQE coalesce).
     if shuffle_partitions is None:
@@ -61,9 +105,13 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(shuffle_partitions),
+        )
+        .config("spark.sql.shuffle.partitions", str(STATE_PARTITIONS_MIN))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -5,12 +5,16 @@ The reference is a batch engine; Facebook's "realtime" was storage-level
 jobs over continuously-appended directories (the Scribe→HDFS pattern).
 This module supplies the modern equivalents over the ``events`` table:
 file-source readStream, tumbling/sliding/session windows, watermarked
-late-data handling, streaming dedup, and idempotent ``foreachBatch``
-sinks (the same partition-overwrite semantics the reference relied on
-for reprocessing, made incremental).
+late-data handling, streaming dedup, and an exactly-once partitioned
+file sink (Spark's own, whose ``_spark_metadata`` log replaces the
+reference's overwrite-the-partition reprocessing).
 
 At scale: state stores are keyed by the groupBy columns — watermarks
 bound state size; ``dropDuplicatesWithinWatermark`` bounds dedup state.
+A new stateful stream gets ``STATE_PARTITIONS_MIN`` stores per operator
+(``session.get_spark`` sets ``spark.sql.shuffle.partitions`` to it and
+gives batch plans their own width); the ``run_*_to_memory`` helpers raise
+that from input bytes (:func:`adaptive_state_partitions`).
 """
 
 from __future__ import annotations
@@ -29,23 +33,25 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from hadoop_20_spark.session import STATE_PARTITIONS_MIN
+
 #: Input bytes per state-store partition for the adaptive sizing rule
 #: below.  State of a watermark-bounded operator is bounded by (a slice
 #: of) its input, so input bytes are the driver-side-knowable proxy for
 #: state volume.
 STATE_PARTITION_TARGET_BYTES = 8 << 20
-STATE_PARTITIONS_MIN = 4
 #: ceiling for the derived count — ~16 GB of input per trigger at the
 #: target above; past that, raise the target, not the cap (more stores
 #: per operator means more per-batch commits, the exact overhead this
 #: rule exists to bound).
 STATE_PARTITIONS_MAX = 2048
 
-# run_*_to_memory briefly lowers spark.sql.shuffle.partitions around
+# run_*_to_memory briefly sets spark.sql.shuffle.partitions around
 # .start() (the stream's cloned session captures it; see
-# adaptive_state_partitions).  Serialize those windows so concurrent
-# stream launches (the g1 GridMix shape) can't restore each other's
-# values out of order.
+# adaptive_state_partitions).  Batch plans do not read that conf (they
+# take AQE's initial partition number), so the lock only keeps
+# concurrent stream launches (the g1 GridMix shape) from restoring each
+# other's values out of order.
 _STATE_CONF_LOCK = threading.Lock()
 
 
@@ -135,9 +141,9 @@ def _start_with_state_partitions(start_fn, spark: SparkSession, state_partitions
     CAPTURES the conf at start (StreamExecution runs on a cloned
     session; verified live: start at 6, restore to 32 immediately →
     progress reports numShufflePartitions=6 for every batch).  The lock
-    bounds the window in which a concurrently-planned batch query could
-    observe the lowered value (harmless for results, AQE re-coalesces
-    anyway, but no reason to leave it racy)."""
+    keeps concurrent launches from restoring each other's values out of
+    order; batch plans take their width from another conf
+    (``session.batch_shuffle_partitions``) and never see this one."""
     if state_partitions is None:
         return start_fn()
     with _STATE_CONF_LOCK:
@@ -556,20 +562,25 @@ def stateful_running_totals(
 
 
 def foreach_batch_idempotent_sink(stream_df: DataFrame, out_path: str, partition_col: str):
-    """Exactly-once-by-idempotence sink: each microbatch overwrites only
-    the partitions it touches (dynamic partition overwrite) — the
-    reference's overwrite-partition-dirs reprocessing contract, applied
-    per-batch."""
+    """Append-only parquet sink under ``out_path``, partitioned by
+    ``partition_col``, exactly-once by batch id: Spark's file sink logs
+    each batch's files in ``out_path/_spark_metadata`` and skips a batch
+    id it has already logged, so a batch replayed after a restart adds
+    nothing, and batch readers of ``out_path`` see only logged files.
+    Later batches add rows to partitions earlier batches wrote (the
+    reference's overwrite-the-partition reprocessing would drop them).
 
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(out_path)
-        )
-
-    return stream_df.writeStream.foreachBatch(write_batch)
+    Returns the writer; the caller sets the trigger.  The checkpoint
+    defaults to ``out_path/_checkpoint`` (batch readers skip ``_`` names)
+    and a caller's ``checkpointLocation`` option replaces it.  It must be
+    durable: a fresh checkpoint restarts at batch 0, and the sink would
+    skip every batch id its log already holds."""
+    return (
+        stream_df.writeStream.format("parquet")
+        .partitionBy(partition_col)
+        .option("path", out_path)
+        .option("checkpointLocation", out_path.rstrip("/") + "/_checkpoint")
+    )
 
 
 def stateful_running_totals_tws(events: DataFrame) -> DataFrame:
@@ -705,9 +716,11 @@ def incremental_dedup_ingest(docs_stream, index_dir: str, checkpoint_dir: str):
     construction — the read side groups by fingerprint).  Scale plan:
     per batch, ONE 32-byte-key partial-agg'd shuffle + one anti-join
     against the index (broadcast while small, shuffle join at corpus
-    scale — AQE decides); the index is append-only parquet partitioned
-    by nothing (at 100 TB: bucket it by fingerprint so the anti-join
-    is co-partitioned and shuffle-free)."""
+    scale — the static planner decides from size estimates, because AQE
+    is off inside ``foreachBatch``, and shuffles run at the stream's
+    ``spark.sql.shuffle.partitions``); the index is append-only parquet
+    partitioned by nothing (at 100 TB: bucket it by fingerprint so the
+    anti-join is co-partitioned and shuffle-free)."""
     from pyspark.sql import functions as F
 
     def ingest(df, epoch_id: int) -> None:

@@ -32,15 +32,25 @@ def _rowset(df):
     return {tuple(str(r[c]) for c in cols) for r in df.collect()}
 
 
+# batch plans take their width from AQE's initial partition number,
+# streams from spark.sql.shuffle.partitions: vary both
+WIDTH_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+)
+
+
 def test_results_stable_across_shuffle_partitions(spark):
     for name in QUERIES:
         base = _rowset(REGISTRY[name].fn(spark, SF_DIR))
-        old = spark.conf.get("spark.sql.shuffle.partitions")
+        old = {k: spark.conf.get(k) for k in WIDTH_CONFS}
         try:
-            spark.conf.set("spark.sql.shuffle.partitions", "3")
+            for k in WIDTH_CONFS:
+                spark.conf.set(k, "3")
             alt = _rowset(REGISTRY[name].fn(spark, SF_DIR))
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+            for k, v in old.items():
+                spark.conf.set(k, v)
         assert base == alt, f"{name} differs across shuffle partitionings"
 
 

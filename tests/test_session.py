@@ -1,6 +1,7 @@
 """session.get_spark sizes Spark's generated-code cache to the working
-set, so a repeated query reuses its compiled classes, and pins the
-driver JVM's JIT code cache, so their compiled methods stay compiled."""
+set, so a repeated query reuses its compiled classes, pins the driver
+JVM's JIT code cache, so their compiled methods stay compiled, and
+gives batch plans and stateful streams separate shuffle widths."""
 
 from __future__ import annotations
 
@@ -9,7 +10,11 @@ import subprocess
 import sys
 
 from hadoop_20_spark.registry import REGISTRY
-from hadoop_20_spark.session import JIT_CODE_CACHE
+from hadoop_20_spark.session import (
+    JIT_CODE_CACHE,
+    STATE_PARTITIONS_MIN,
+    batch_shuffle_partitions,
+)
 
 from conftest import SF_DIR
 
@@ -63,3 +68,59 @@ def test_driver_jit_code_cache_survives_tier_cap():
         cwd=REPO, env=env, capture_output=True, text=True, timeout=300, check=True,
     ).stdout
     assert int(out.split()[-1]) == int(JIT_CODE_CACHE.rstrip("m")) << 20
+
+
+def _exchange_widths(df) -> set[int]:
+    """Partition counts of the hash exchanges in ``df``'s initial plan."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {int(n) for n in re.findall(r"hashpartitioning\(.*, (\d+)\)", plan)}
+
+
+def test_batch_width_ignores_stream_width_conf(spark):
+    """Batch plans take AQE's initial partition number, so setting
+    ``spark.sql.shuffle.partitions`` (the stream width) leaves them as
+    they are."""
+    from pyspark.sql import functions as F
+
+    def plan():
+        return spark.range(0, 1000, 1, 2).groupBy((F.col("id") % 7).alias("k")).count()
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(STATE_PARTITIONS_MIN)
+    assert _exchange_widths(plan()) == {8}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        assert _exchange_widths(plan()) == {8}
+        assert batch_shuffle_partitions(spark) == 8
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS_MIN))
+
+
+def test_batch_shuffle_partitions_follows_spark_rule(spark):
+    """The helper agrees with ``SQLConf.numShufflePartitions`` whichever
+    of the confs it reads are set."""
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+    )
+    saved = {k: spark.conf.get(k) for k in keys}
+    jconf = spark._jsparkSession.sessionState().conf()
+    try:
+        for aqe, coalesce, initial in (
+            ("true", "true", "8"),
+            ("true", "true", None),
+            ("true", "false", "8"),
+            ("false", "true", "8"),
+        ):
+            spark.conf.set(keys[0], aqe)
+            spark.conf.set(keys[1], coalesce)
+            if initial is None:
+                spark.conf.unset(keys[2])
+            else:
+                spark.conf.set(keys[2], initial)
+            assert batch_shuffle_partitions(spark) == jconf.numShufflePartitions()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

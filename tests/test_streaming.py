@@ -4,6 +4,7 @@ from pyspark.sql import functions as F
 
 from hadoop_20_spark import streaming
 from hadoop_20_spark.catalog import load_table
+from hadoop_20_spark.session import STATE_PARTITIONS_MIN
 from tests.conftest import SF_DIR
 
 
@@ -531,3 +532,145 @@ def test_state_partitions_capture_and_conf_restore(spark):
     # and the helper-run results are unaffected by the partitioning
     n_events = load_table(spark, "events", SF_DIR).count()
     assert got.count() == n_events
+
+
+def _drop_hour_events(sf_dir, ids, k: int) -> None:
+    """Write file ``k`` of an events source directory
+    (``<sf_dir>/events.parquet/``): distinct events ``ids``, all in the
+    hour 2024-01-01 10:00, stamped with mtime order ``k`` so the file
+    source reads the files in that order."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ids = list(ids)
+    src = os.path.join(sf_dir, "events.parquet")
+    os.makedirs(src, exist_ok=True)
+    path = os.path.join(src, f"part-{k:05d}.parquet")
+    hour = datetime.datetime(2024, 1, 1, 10)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(ids, pa.int64()),
+                "ts": pa.array(
+                    [hour + datetime.timedelta(minutes=i) for i in ids],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array(ids, pa.int64()),
+                "event_type": pa.array(["click"] * len(ids), pa.string()),
+                "value": pa.array([1.0] * len(ids), pa.float64()),
+                "props": pa.array(["{}"] * len(ids), pa.string()),
+            }
+        ),
+        path,
+    )
+    mtime = 1_700_000_000 + 10 * k
+    os.utime(path, (mtime, mtime))
+
+
+def _run_hour_sink(spark, sf_dir, out, ckpt, start=None):
+    """One available-now catch-up of stream_dedup into the sink,
+    partitioned by hour; returns the query's progress list."""
+    ev = streaming.read_events_stream(spark, sf_dir)
+    df = streaming.stream_dedup(ev).withColumn(
+        "part", F.date_format("ts", "yyyyMMddHH")
+    )
+    writer = (
+        streaming.foreach_batch_idempotent_sink(df, out, "part")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    q = start(writer.start) if start else writer.start()
+    q.awaitTermination()
+    return q.recentProgress
+
+
+def test_idempotent_sink_keeps_earlier_rows_of_a_partition(spark, tmp_path):
+    """Two catch-up runs add 2 and then 3 distinct events to the same
+    hour partition: the sink must hold all 5, not only the last run's."""
+    sf_dir = str(tmp_path / "feed")
+    out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    _drop_hour_events(sf_dir, range(0, 2), 0)
+    _run_hour_sink(spark, sf_dir, out, ckpt)
+    _drop_hour_events(sf_dir, range(2, 5), 1)
+    _run_hour_sink(spark, sf_dir, out, ckpt)
+    got = spark.read.parquet(out)
+    assert sorted(r.event_id for r in got.collect()) == [0, 1, 2, 3, 4]
+    assert got.select("part").distinct().count() == 1
+
+
+def test_idempotent_sink_replay_adds_no_rows(spark, tmp_path):
+    """A crash after the sink wrote a batch but before the query logged
+    its commit replays that batch on restart; the sink must skip it."""
+    import os
+
+    sf_dir = str(tmp_path / "feed")
+    out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    _drop_hour_events(sf_dir, range(0, 2), 0)
+    _drop_hour_events(sf_dir, range(2, 5), 1)
+    _run_hour_sink(spark, sf_dir, out, ckpt)
+    before = sorted(r.event_id for r in spark.read.parquet(out).collect())
+    assert before == [0, 1, 2, 3, 4]
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for n in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, n)):
+            os.remove(os.path.join(commits, n))
+    progress = _run_hour_sink(spark, sf_dir, out, ckpt)
+    assert [p["batchId"] for p in progress][:1] == [last]  # replayed
+    after = sorted(r.event_id for r in spark.read.parquet(out).collect())
+    assert after == before
+
+
+def _state_widths(progress):
+    return {
+        op.get("numShufflePartitions")
+        for p in progress
+        for op in (p.get("stateOperators") or [])
+    }
+
+
+def test_plain_start_stateful_stream_gets_state_partitions_min(spark):
+    """A stateful stream started with a plain ``.start()`` on a
+    ``get_spark`` session gets the state width, not the batch width."""
+    stream = streaming.read_events_stream(spark, SF_DIR)
+    q = (
+        streaming.stream_dedup(stream)
+        .select("event_id")
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName(streaming._unique_sink_name("t_plain_width"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert _state_widths(q.recentProgress) == {STATE_PARTITIONS_MIN}
+
+
+def test_existing_checkpoint_keeps_its_state_width(spark, tmp_path):
+    """A checkpoint created with 8 state stores restarts with 8 (the
+    width lives in its offset log), and its sink ends with the same rows
+    as a stream that ran at the session's state width throughout."""
+    sf_dir = str(tmp_path / "feed")
+    out8, ckpt8 = str(tmp_path / "sink8"), str(tmp_path / "ckpt8")
+    out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    _drop_hour_events(sf_dir, range(0, 2), 0)
+
+    def at_8(start):
+        return streaming._start_with_state_partitions(start, spark, 8)
+
+    assert _state_widths(_run_hour_sink(spark, sf_dir, out8, ckpt8, at_8)) == {8}
+    assert _state_widths(_run_hour_sink(spark, sf_dir, out, ckpt)) == {
+        STATE_PARTITIONS_MIN
+    }
+    _drop_hour_events(sf_dir, range(2, 5), 1)
+    assert _state_widths(_run_hour_sink(spark, sf_dir, out8, ckpt8)) == {8}
+    _run_hour_sink(spark, sf_dir, out, ckpt)
+
+    def rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    assert rows(out8) == rows(out)
+    assert len(rows(out)) == 5
