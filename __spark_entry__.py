@@ -1,11 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract: ``entry(spark)`` runs the flagship query as a smoke
+check, ``queries()`` maps every registry name to its query function, and
+``oracle_sql()`` maps each name to the DuckDB SQL that
+``tools/oracle_check.py`` compares it against.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
-
-Implementations live in ``hadoop_20_spark.registry``; this file stays a
+Implementations live in ``hadoop_20_spark.queries``; this file stays a
 thin adapter.
 """
 
@@ -19,12 +17,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from hadoop_20_spark import registry  # noqa: E402
+from hadoop_20_spark import queries as registry  # noqa: E402
+from hadoop_20_spark.queries.tpch import q1_pricing_summary  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H-Q1-shaped pricing summary) on sf0.001."""
-    return registry.q1_pricing_summary(spark, "/root/testdata/sf0.001")
+    return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

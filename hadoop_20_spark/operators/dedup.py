@@ -744,8 +744,8 @@ def containment_topk(
     longer carry).  Because the auto cap and the volume guard already
     run actions at build time, the function finishes the job eagerly:
     the ≤ n·k result is computed and cached, then the fat postings
-    cache is RELEASED before returning — repeated invocations (bench /
-    probe loops) hold at most one small result cache, not a session
+    cache is RELEASED before returning — repeated invocations (benchmark
+    loops) hold at most one small result cache, not a session
     lifetime of shingle postings (the r12 leak)."""
     from pyspark.sql import Window
 

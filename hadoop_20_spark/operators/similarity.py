@@ -94,13 +94,12 @@ KMEANS_TRAIN_SAMPLE = 25_000
 KMEANS_DRIVER_MAX_ROWS = 4 * KMEANS_TRAIN_SAMPLE
 KMEANS_DRIVER_MAX_WORK = 50_000_000  # sample_rows × k ceiling
 KMEANS_DRIVER_MAX_MODEL = 1_000_000  # k × dim ceiling (exact-mean loop)
-#: kill switches for A/B probes and the path-equality tests
+#: kill switch: False forces the distributed Lloyd loop (the reference
+#: path the path-equality tests compare the driver loop against)
 KMEANS_DRIVER_LLOYD = True
 #: GEMM-class distributed Lloyd assignment (exact numpy kernel per
 #: Arrow batch past ASSIGN_GEMM_MIN_K — never at an oracle-gate scale)
 KMEANS_ASSIGN_KERNEL = True
-#: observability: which path the last kmeans_centroids call took
-LAST_TRAIN_PATH: str | None = None
 
 
 def kmeans_train_mod(n_rows: int, sample: int = KMEANS_TRAIN_SAMPLE) -> int:
@@ -861,7 +860,6 @@ def kmeans_centroids(
     ``ivf_topk(centroids=...)``, and downstream broadcasts of it cost
     no cluster job at all.
     """
-    global LAST_TRAIN_PATH
     spark = corpus.sparkSession
     if k > ASSIGN_GEMM_MAX_K:
         # the seed collect below pulls k rows to the driver — same
@@ -961,7 +959,6 @@ def kmeans_centroids(
             else None
         )
         if driven is not None:
-            LAST_TRAIN_PATH = "driver"
             return spark.createDataFrame(
                 [(cid, driven[cid]) for cid in sorted(driven)], cent_schema
             )
@@ -970,7 +967,6 @@ def kmeans_centroids(
         # skipped above, so restore it before the distributed loop
         if train_sample_mod is not None:
             c = c.localCheckpoint()
-    LAST_TRAIN_PATH = "distributed"
     arr_schema = "_cents array<struct<cent_id:bigint,c_vec:array<double>>>"
 
     # argmax(sim DESC, cent_id ASC) as a ROW-LOCAL array_max — same

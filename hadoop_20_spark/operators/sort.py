@@ -234,7 +234,7 @@ def distributed_global_rank(
     relation is bounded by the input (entity-bounded at every call site
     per the SCALE.md persist rule); library users running many rank
     passes in one session should ``spark.catalog.clearCache()`` between
-    logical jobs — the registry/bench/oracle harnesses all do.
+    logical jobs — the oracle gate and the plan-smells sweep do.
     """
     lead = keys[0]
     spark = df.sparkSession
@@ -555,14 +555,6 @@ def exact_order_statistic(
     return values[k], rounds
 
 
-#: optional observer called as ``hook(round_no, counts_df)`` with each
-#: refinement round's EXACT executed count DataFrame, BEFORE its
-#: collect.  Plan-evidence capture only (the refinement queries return
-#: driver-built relations whose explain() cannot show the per-round
-#: scans — r13 verdict "What's wrong #1"); must not trigger actions.
-ROUND_PLAN_HOOK = None
-
-
 def _offset_bucket_sql(col: str, lo: int, hi: int, w: int) -> str:
     """SQL for the refinement bucket ``(col - lo) DIV w`` over the
     surviving range [lo, hi].  The driver holds lo/hi, so the widening
@@ -684,13 +676,6 @@ def exact_order_statistics(
             .groupBy("s")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        if ROUND_PLAN_HOOK is not None:
-            # observability only (plan-evidence capture for driver-paced
-            # refinement queries — the final returned relation is a
-            # driver-built LocalRelation whose explain() never shows the
-            # per-round scans, so tools/r14_plan_capture.py hooks the
-            # EXACT executed round DataFrame here); no-op when unset.
-            ROUND_PLAN_HOOK(rounds, counts_df)
         counts: dict[tuple[int, int], int] = {
             (r["s"] // width, r["s"] % width): r["cnt"]
             for r in counts_df.collect()

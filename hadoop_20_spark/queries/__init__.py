@@ -1,8 +1,9 @@
-"""Query registry package — the driver-facing inventory (SURVEY §2).
+"""Query registry package — the engine's query inventory (SURVEY §2).
 
 REGISTRY is populated by importing the per-domain modules below; their
 import order (and definition order within each module) preserves the
 original single-file registry order, which re-registrations rely on.
+``queries()`` and ``oracle_sql()`` list the entries in that order.
 """
 
 from __future__ import annotations
@@ -31,40 +32,8 @@ from hadoop_20_spark.queries import encodings  # noqa: F401,E402
 from hadoop_20_spark.queries import sketches  # noqa: F401,E402
 
 
-def _driver_seen() -> frozenset[str]:
-    """Names with a green row in any per-round driver correctness file
-    (CORRECTNESS_r*.json at the repo root).  queries() lists
-    not-yet-driver-verified entries FIRST so that if the driver samples
-    a prefix, every registry query accumulates a driver-green row across
-    rounds.  Derived from the files (not hardcoded) so renames/typos
-    can't silently no-op and failed rows (err set) are re-offered."""
-    import json
-    from pathlib import Path
-
-    seen: set[str] = set()
-    # this file is <repo>/hadoop_20_spark/queries/__init__.py; the
-    # driver writes CORRECTNESS_r*.json at <repo> — three parents up
-    root = Path(__file__).resolve().parent.parent.parent
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            data = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if (
-                isinstance(row, dict)
-                and row.get("err") is None
-                and row.get("rows_match") is not False
-                and row.get("hash_match") is not False
-            ):
-                seen.add(name)
-    return frozenset(seen & set(REGISTRY))
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    seen = _driver_seen()
-    ordered = sorted(REGISTRY.items(), key=lambda kv: kv[0] in seen)
-    return {name: q.fn for name, q in ordered}
+    return {name: q.fn for name, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -191,8 +191,9 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return stream_ops.run_append_to_memory(
+    return stream_ops.run_to_memory(
         deduped, "q_streaming_dedup",
+        output_mode="append",
         state_partitions=_events_state_partitions(spark, sf_dir),
     )
 
@@ -413,8 +414,9 @@ def stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = events.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", "NoTimeout"
     )
-    table = stream_ops.run_update_to_memory(
+    table = stream_ops.run_to_memory(
         updates, "q_stateful_totals",
+        output_mode="update",
         state_partitions=_events_state_partitions(spark, sf_dir),
     )
     return table.groupBy("user_id").agg(
@@ -472,8 +474,9 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("c_user").alias("user_id"), "click_id", "purchase_id"
     )
-    return stream_ops.run_append_to_memory(
+    return stream_ops.run_to_memory(
         joined, "q_stream_join",
+        output_mode="append",
         state_partitions=_events_state_partitions(spark, sf_dir),
     )
 
@@ -536,8 +539,9 @@ def streaming_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
         "leftOuter",
     ).select(F.col("c_user").alias("user_id"), "click_id", "purchase_id")
-    table = stream_ops.run_append_to_memory(
+    table = stream_ops.run_to_memory(
         joined, "q_stream_outer_join",
+        output_mode="append",
         state_partitions=_events_state_partitions(spark, sf_dir),
     )
     return table.filter(F.col("click_id") >= 0).orderBy("click_id", "purchase_id")
@@ -579,7 +583,9 @@ def streaming_custom_source_totals(spark: SparkSession, sf_dir: str) -> DataFram
         .option("maxRows", 600)
         .load()
     )
-    table = stream_ops.run_append_to_memory(stream, "q_custom_source")
+    table = stream_ops.run_to_memory(
+        stream, "q_custom_source", output_mode="append"
+    )
     return (
         table.groupBy("event_type")
         .agg(
@@ -1607,8 +1613,9 @@ def streaming_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFr
         "click_id",
         "purchase_id",
     )
-    table = stream_ops.run_append_to_memory(
+    table = stream_ops.run_to_memory(
         joined, "q_stream_full_outer_join",
+        output_mode="append",
         state_partitions=_events_state_partitions(spark, sf_dir),
     )
     return (
@@ -1680,8 +1687,9 @@ def streaming_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
         "leftSemi",
     ).select(F.col("c_user").alias("user_id"), "click_id")
-    table = stream_ops.run_append_to_memory(
+    table = stream_ops.run_to_memory(
         joined, "q_stream_semi_join",
+        output_mode="append",
         state_partitions=_events_state_partitions(spark, sf_dir),
     )
     return table.filter(F.col("click_id") >= 0).orderBy("user_id", "click_id")

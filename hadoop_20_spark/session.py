@@ -57,6 +57,15 @@ JIT_CODE_CACHE = "240m"
 STATE_PARTITIONS_MIN = 4
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: 40% of
+    physical memory in whole GB (at least 1g, at most 16g), so two
+    driver JVMs (a test suite's and the subprocess one it starts) fit
+    in the machine's memory together."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16, max(1, int(phys * 0.4) >> 30))}g"
+
+
 def batch_shuffle_partitions(spark: SparkSession) -> int:
     """The shuffle width batch plans get on ``spark``, by Spark's own rule
     (``SQLConf.numShufflePartitions``): AQE's initial partition number
@@ -120,7 +129,10 @@ def get_spark(
         # the reference's core/util/bloom + BloomMapFile scan filtering.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()),
+        )
         # Spark's generated-class cache (default 100 entries) is smaller
         # than one steady-state pass: llm_curation uses ~133 distinct
         # classes and warehouse_etl ~126 (2.2 KB of bytecode on average,

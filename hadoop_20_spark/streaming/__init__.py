@@ -50,7 +50,7 @@ STATE_PARTITIONS_MAX = 2048
 # .start() (the stream's cloned session captures it; see
 # adaptive_state_partitions).  Batch plans do not read that conf (they
 # take AQE's initial partition number), so the lock only keeps
-# concurrent stream launches (the g1 GridMix shape) from restoring each
+# concurrent stream launches on one session from restoring each
 # other's values out of order.
 _STATE_CONF_LOCK = threading.Lock()
 
@@ -341,9 +341,10 @@ def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
 def _unique_sink_name(name: str) -> str:
     """Suffix a memory-sink query name with a nonce: a fixed name makes
     two CONCURRENT instances of the same query collide ('query with
-    that name is already active') — the GridMix concurrent-mix bench
-    runs exactly that shape.  The registered result table is tiny and
-    per-run; the caller reads it through the returned DataFrame."""
+    that name is already active'), as when two callers on one session
+    run the same streaming registry query.  The registered result table
+    is tiny and per-run; the caller reads it through the returned
+    DataFrame."""
     import uuid
 
     return f"{name}_{uuid.uuid4().hex[:8]}"
@@ -361,8 +362,8 @@ def run_to_memory(
 
     ``output_mode`` defaults to ``complete`` (right for the aggregate
     queries this is used with); pass ``append`` for non-aggregate
-    streams, or use :func:`run_append_to_memory` /
-    :func:`run_update_to_memory`.  ``state_partitions`` (see
+    streams and ``update`` for stateful operators that emit per-batch
+    state updates.  ``state_partitions`` (see
     :func:`adaptive_state_partitions`) sizes the query's state stores
     from the data instead of the core count.
     """
@@ -376,108 +377,6 @@ def run_to_memory(
         state_partitions,
     )
     q.processAllAvailable()
-    q.stop()
-    return stream_df.sparkSession.table(name)
-
-
-def run_update_to_memory(
-    stream_df: DataFrame, name: str, state_partitions: int | None = None
-) -> DataFrame:
-    """Update-mode memory sink (stateful operators emit per-batch state
-    updates; the table accumulates one row per key per batch)."""
-    name = _unique_sink_name(name)
-    q = _start_with_state_partitions(
-        lambda: stream_df.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start(),
-        stream_df.sparkSession,
-        state_partitions,
-    )
-    q.processAllAvailable()
-    q.stop()
-    return stream_df.sparkSession.table(name)
-
-
-# State-store observability for the most recent run_append_to_memory
-# call: peak/final state rows + peak memory across all stateful
-# operators, per microbatch progress.  A state-store leak (watermark
-# not bounding the join buffers) shows up here long before it shows up
-# in wall-clock — bench.py copies this into the b13 detail and
-# tests/test_streaming.py asserts the sentinel flush drains state.
-LAST_QUERY_PROGRESS: dict = {}
-
-# Per-invocation progress log for CONCURRENT streaming runs: the
-# GridMix mix (g1) runs two stream-join copies at once, and two threads
-# racing on LAST_QUERY_PROGRESS leave one run's metrics unrecorded.
-# Every run_append_to_memory appends (sink name incl. nonce, metrics,
-# wall) here under a lock; g1 drains it to attribute per-batch latency
-# to each concurrent copy.  Bounded; drain with pop_query_progress().
-_PROGRESS_LOCK = threading.Lock()
-RECENT_PROGRESS_LOG: list[dict] = []
-_PROGRESS_LOG_MAX = 256
-
-
-def pop_query_progress() -> list[dict]:
-    """Drain and return the accumulated per-run streaming metrics."""
-    with _PROGRESS_LOCK:
-        out = list(RECENT_PROGRESS_LOG)
-        RECENT_PROGRESS_LOG.clear()
-    return out
-
-
-def run_append_to_memory(
-    stream_df: DataFrame, name: str, state_partitions: int | None = None
-) -> DataFrame:
-    name = _unique_sink_name(name)
-    t0 = time.time()
-    q = _start_with_state_partitions(
-        lambda: stream_df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start(),
-        stream_df.sparkSession,
-        state_partitions,
-    )
-    q.processAllAvailable()
-    rows_by_batch = []
-    mem_peak = 0
-    batch_ms = []
-    for p in q.recentProgress:
-        ops = p.get("stateOperators") or []
-        rows_by_batch.append(sum(op.get("numRowsTotal", 0) for op in ops))
-        mem_peak = max(
-            mem_peak, sum(op.get("memoryUsedBytes", 0) for op in ops)
-        )
-        # per-batch latency: the quantity a real streaming regression
-        # moves — total wall is micro-batch fixed cost (sf1 ×1.0), so a
-        # per-batch slowdown can hide under the suite floor
-        dur = (p.get("durationMs") or {}).get("triggerExecution")
-        if dur is not None:
-            batch_ms.append(int(dur))
-    metrics = {
-        "n_batches": len(rows_by_batch),
-        "state_rows_peak": max(rows_by_batch, default=0),
-        "state_rows_final": rows_by_batch[-1] if rows_by_batch else 0,
-        "state_memory_peak_bytes": mem_peak,
-        "batch_ms_p50": (
-            sorted(batch_ms)[len(batch_ms) // 2] if batch_ms else 0
-        ),
-        "batch_ms_max": max(batch_ms, default=0),
-    }
-    LAST_QUERY_PROGRESS.clear()
-    LAST_QUERY_PROGRESS.update(metrics)
-    with _PROGRESS_LOCK:
-        if len(RECENT_PROGRESS_LOG) >= _PROGRESS_LOG_MAX:
-            del RECENT_PROGRESS_LOG[: _PROGRESS_LOG_MAX // 2]
-        RECENT_PROGRESS_LOG.append(
-            {
-                "sink": name,
-                "wall_secs": round(time.time() - t0, 3),
-                "batch_ms": batch_ms,
-                **metrics,
-            }
-        )
     q.stop()
     return stream_df.sparkSession.table(name)
 

@@ -82,7 +82,7 @@ def test_pagerank_matches_integer_model(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     # orders: order o belongs to customer c; lineitem: order o bought
     # from supplier s.  Supplier 1 is a hub (every customer buys there).
@@ -134,7 +134,7 @@ def test_bfs_khop_matches_python_model(spark):
     import collections
 
     from hadoop_20_spark import load_table
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     sf = "/root/testdata/sf0.001"
     li = load_table(spark, "lineitem", sf).select("l_orderkey", "l_suppkey")

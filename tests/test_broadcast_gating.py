@@ -16,7 +16,7 @@ import pytest
 
 from hadoop_20_spark.operators.joins import _parse_size, broadcast_if_small
 from hadoop_20_spark.plans import physical_plan
-from hadoop_20_spark.registry import REGISTRY
+from hadoop_20_spark.queries import REGISTRY
 
 PLAN_SF = "/root/testdata/sf0.01"
 

@@ -4,7 +4,7 @@ novelty conservation, sweep-line model check, discrete-percentile gate."""
 import duckdb
 import pytest
 
-from hadoop_20_spark.registry import REGISTRY
+from hadoop_20_spark.queries import REGISTRY
 from tests.conftest import SF_DIR
 
 
@@ -388,7 +388,7 @@ def test_hll_merge_dominance_and_error(spark):
 def test_histogram_quantile_error_contract(spark):
     """The sketch's whole point: 0 <= exact - est < bucket width, and the
     merged mass conserves the row count, for both rank probes."""
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     rows = REGISTRY["histogram_quantile_merge"].fn(
         spark, "/root/testdata/sf0.001"

@@ -150,7 +150,7 @@ def test_embedding_near_dups(spark, tables):
 
 
 def test_ivf_topk_recall_vs_exact(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
     from tests.conftest import SF_DIR
 
     exact = {
@@ -166,7 +166,7 @@ def test_ivf_topk_recall_vs_exact(spark):
 
 
 def test_session_window_agg_conserves_events(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
     from tests.conftest import SF_DIR
     from pyspark.sql import functions as F
 
@@ -474,7 +474,7 @@ def test_kmeans_centroids_empty_seed_raises(spark):
 
 
 def test_ivf_topk_kmeans_recall(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
     from tests.conftest import SF_DIR
 
     exact = {
@@ -753,7 +753,7 @@ def test_containment_prefix_filter_matches_python_model(spark):
 def test_streaming_backfill_equals_batch(spark):
     """AvailableNow backfill must be row-identical to the batch
     aggregate (exactly-once over the staged backlog)."""
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
     from tests.conftest import SF_DIR
     from hadoop_20_spark.catalog import load_table
 
@@ -894,7 +894,7 @@ def test_span_report_matches_removal(spark):
     """dup_span_report measures what dup_span_removal removes: the
     merged-span token coverage must equal the removed-token count per
     source (both are the union of duplicate windows)."""
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     sf = "/root/testdata/sf0.001"
     rep = {

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hadoop_20_spark.registry import REGISTRY
+from hadoop_20_spark.queries import REGISTRY
 from tests.conftest import SF_DIR
 
 QUERIES = [

@@ -116,7 +116,7 @@ def test_bloom_filter_no_false_negatives(spark):
 def test_bloom_audit_consistency(spark):
     """pass >= true matches (no false negatives at query level) and the
     fp accounting adds up."""
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     (r,) = REGISTRY["bloom_semi_join_audit"].fn(
         spark, "/root/testdata/sf0.01"
@@ -217,7 +217,7 @@ def test_session_overlap_plan_no_cartesian(spark):
     """The interval join must plan as a cell equi-join — never a
     cartesian or broadcast-nested-loop theta join."""
     from hadoop_20_spark.plans import physical_plan
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     plan = physical_plan(
         REGISTRY["session_overlap_partners"].fn(spark, "/root/testdata/sf0.01")

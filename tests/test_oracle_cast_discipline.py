@@ -77,7 +77,7 @@ def test_no_oracle_casts_decimal_sum_directly_to_double():
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from hadoop_20_spark.catalog import TABLES, table_path
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     sf_dir = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.001")
     con = duckdb.connect()

@@ -9,13 +9,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hadoop_20_spark.plans import diagnose
-from hadoop_20_spark.registry import REGISTRY
+from hadoop_20_spark.queries import REGISTRY
 
 LINT_SF = "/root/testdata/sf0.01"
 
 # Streaming-family queries RUN a stream inside the fn (no static plan
 # to lint without executing); their plan discipline is covered by
-# tests/test_streaming.py and the state-store metrics in bench b13.
+# tests/test_streaming.py.
 SKIP_PREFIXES = ("streaming_",)
 
 

@@ -39,7 +39,7 @@ def _registry_size() -> int:
     import sys
 
     sys.path.insert(0, REPO)
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     return len(REGISTRY)
 

@@ -372,7 +372,7 @@ def test_peak_concurrency_sweep_matches_model(spark, evs):
     import os
     import tempfile
 
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     base = dt.datetime(2024, 5, 1)
     rows = [

@@ -6,7 +6,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_balancer_move_plan_conserves_and_lands_exactly(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     rows = REGISTRY["balancer_move_plan"].fn(spark, SF).collect()
     assert rows, "fixture placement should be imbalanced somewhere"
@@ -24,7 +24,7 @@ def test_balancer_move_plan_conserves_and_lands_exactly(spark):
 
 
 def test_epoch_shuffle_bijection_and_decorrelation(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     rows = REGISTRY["epoch_shuffle_audit"].fn(spark, SF).collect()
     by_epoch = {}
@@ -47,7 +47,7 @@ def test_epoch_shuffle_bijection_and_decorrelation(spark):
 
 
 def test_ahash_multiprobe_recall_complete(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     rows = REGISTRY["image_ahash_multiprobe"].fn(spark, SF).collect()
     assert rows

@@ -17,7 +17,7 @@ def test_weighted_reservoir_matches_independent_recompute(spark):
     key formula (python md5 + math.pow — no Spark, no DuckDB), so a bug
     shared by both engines' SQL spellings can't hide."""
     import pandas as pd  # noqa: F401
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     out = REGISTRY["weighted_reservoir_sample"].fn(spark, SF).collect()
     assert len(out) == 200
@@ -43,7 +43,7 @@ def test_weighted_reservoir_matches_independent_recompute(spark):
 
 
 def test_weighted_reservoir_plan_is_takeordered_no_exchange(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     plan = _plan(REGISTRY["weighted_reservoir_sample"].fn(spark, SF))
     assert "TakeOrderedAndProject" in plan
@@ -53,7 +53,7 @@ def test_weighted_reservoir_plan_is_takeordered_no_exchange(spark):
 
 
 def test_rrf_fusion_arithmetic_and_membership(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     rows = REGISTRY["rrf_hybrid_topk"].fn(spark, SF).collect()
     assert 0 < len(rows) <= 10
@@ -79,7 +79,7 @@ def test_rrf_fusion_arithmetic_and_membership(spark):
 
 
 def test_rrf_plan_no_global_window(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     plan = _plan(REGISTRY["rrf_hybrid_topk"].fn(spark, SF))
     assert "No Partition Defined" not in plan
@@ -88,7 +88,7 @@ def test_rrf_plan_no_global_window(spark):
 
 
 def test_namespace_quota_subtree_conservation(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     rows = REGISTRY["namespace_quota_audit"].fn(spark, SF).collect()
     by_level = {}
@@ -127,7 +127,7 @@ def test_namespace_quota_subtree_conservation(spark):
 
 
 def test_namespace_quota_single_fact_shuffle(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     plan = _plan(REGISTRY["namespace_quota_audit"].fn(spark, SF))
     # orders scanned exactly once; dims broadcast

@@ -13,7 +13,7 @@ def _plan(df) -> str:
 
 
 def test_grouped_reservoir_matches_independent_recompute(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     out = REGISTRY["weighted_reservoir_per_group"].fn(spark, SF).collect()
     docs = (
@@ -46,7 +46,7 @@ def test_grouped_reservoir_matches_independent_recompute(spark):
 
 
 def test_grouped_reservoir_plan_group_limit_no_single_partition(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     plan = _plan(REGISTRY["weighted_reservoir_per_group"].fn(spark, SF))
     # rank<=k rewritten to per-map-task group heaps BEFORE the exchange:
@@ -61,7 +61,7 @@ def test_straggler_audit_matches_exact_integer_recompute(spark):
     python ints (true unbounded arithmetic): per-task exact rate, the
     (S1 - n*r)^2 > n*S2 - S1^2 predicate, and the slowest-10 truncation
     must all reproduce the query's output exactly."""
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     out = REGISTRY["speculative_straggler_audit"].fn(spark, SF).collect()
     ev = (
@@ -114,7 +114,7 @@ def test_straggler_audit_matches_exact_integer_recompute(spark):
 
 
 def test_straggler_audit_single_fact_scan_broadcast_stats(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     plan = _plan(REGISTRY["speculative_straggler_audit"].fn(spark, SF))
     assert plan.count("events.parquet") == 2  # task grain + job stats twin
@@ -127,7 +127,7 @@ def test_straggler_audit_single_fact_scan_broadcast_stats(spark):
 def test_embedding_covariance_matches_numpy(spark):
     import numpy as np
 
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     out = REGISTRY["embedding_covariance_topk"].fn(spark, SF).collect()
     assert len(out) == 10
@@ -166,7 +166,7 @@ def test_embedding_covariance_matches_numpy(spark):
 
 
 def test_embedding_covariance_plan_partial_agg_no_vector_shuffle(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     from pyspark.sql import functions as F
 

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hadoop_20_spark.registry import REGISTRY
+from hadoop_20_spark.queries import REGISTRY
 
 
 def test_straggler_audit_raises_before_decimal_overflow(spark, tmp_path):

@@ -124,19 +124,29 @@ def _model_md5(df) -> str:
 
 
 @pytest.mark.parametrize("mod", [None, 1, 2])
-def test_kmeans_driver_path_matches_distributed(spark, tables, mod):
+def test_kmeans_driver_path_matches_distributed(spark, tables, count_jobs, mod):
+    """The driver Lloyd loop iterates without Spark jobs, so its job
+    count does not grow with ``iterations``; the distributed loop
+    collects the model each iteration, so its count does."""
     emb = tables["embeddings"]
+    emb.count()  # build the cached input before any job is counted
+
+    def train(iterations):
+        return count_jobs(
+            lambda: sim.kmeans_centroids(
+                emb, k=8, iterations=iterations, train_sample_mod=mod
+            )
+        )
+
     try:
-        m1 = sim.kmeans_centroids(
-            emb, k=8, iterations=2, train_sample_mod=mod
-        )
+        m1, jobs2 = train(2)
         h1 = _model_md5(m1)
-        assert sim.LAST_TRAIN_PATH == "driver"
+        _, jobs1 = train(1)
+        assert jobs2 == jobs1, (jobs1, jobs2)
         sim.KMEANS_DRIVER_LLOYD = False
-        m2 = sim.kmeans_centroids(
-            emb, k=8, iterations=2, train_sample_mod=mod
-        )
-        assert sim.LAST_TRAIN_PATH == "distributed"
+        m2, jobs2 = train(2)
+        _, jobs1 = train(1)
+        assert jobs2 > jobs1, (jobs1, jobs2)
         assert _model_md5(m2) == h1
     finally:
         sim.KMEANS_DRIVER_LLOYD = True
@@ -173,14 +183,16 @@ def test_pq_encode_kernel_matches_aggregate(spark, tables, monkeypatch):
     assert kern == base
 
 
-def test_kmeans_driver_falls_back_on_ragged_vectors(spark):
+def test_kmeans_driver_falls_back_on_ragged_vectors(spark, count_jobs):
     df = spark.createDataFrame(
         [(0, [1.0, 2.0]), (1, [2.0, 1.0]), (2, [3.0, 4.0, 5.0]), (3, [1.0, 5.0])],
         "vec_id bigint, embedding array<double>",
     )
-    m = sim.kmeans_centroids(df, k=2, iterations=1)
-    assert sim.LAST_TRAIN_PATH == "distributed"
+    m, jobs1 = count_jobs(lambda: sim.kmeans_centroids(df, k=2, iterations=1))
     assert m.count() == 2  # historical behavior preserved
+    # the distributed loop ran: its job count grows with iterations
+    _, jobs2 = count_jobs(lambda: sim.kmeans_centroids(df, k=2, iterations=2))
+    assert jobs2 > jobs1, (jobs1, jobs2)
 
 
 def test_kmeans_rejects_k_past_driver_model_ceiling(spark, tables):

@@ -1,7 +1,8 @@
 """session.get_spark sizes Spark's generated-code cache to the working
 set, so a repeated query reuses its compiled classes, pins the driver
-JVM's JIT code cache, so their compiled methods stay compiled, and
-gives batch plans and stateful streams separate shuffle widths."""
+JVM's JIT code cache, so their compiled methods stay compiled, sizes
+the driver heap to the machine, and gives batch plans and stateful
+streams separate shuffle widths."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import os
 import subprocess
 import sys
 
-from hadoop_20_spark.registry import REGISTRY
+from hadoop_20_spark.queries import REGISTRY
 from hadoop_20_spark.session import (
     JIT_CODE_CACHE,
     STATE_PARTITIONS_MIN,
@@ -68,6 +69,28 @@ def test_driver_jit_code_cache_survives_tier_cap():
         cwd=REPO, env=env, capture_output=True, text=True, timeout=300, check=True,
     ).stdout
     assert int(out.split()[-1]) == int(JIT_CODE_CACHE.rstrip("m")) << 20
+
+
+_HEAP_PROBE = """
+from hadoop_20_spark.session import get_spark
+spark = get_spark("probe", master="local[1]")
+print(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
+spark.stop()
+"""
+
+
+def test_default_driver_heap_fits_the_machine():
+    """With ``SPARK_DRIVER_MEM`` unset the driver heap follows physical
+    memory: at most half of it, so the suite's JVM and a subprocess JVM
+    fit side by side.  A fresh JVM is needed, hence the subprocess."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_DRIVER_MEM"}
+    env["SPARK_UI"] = "false"
+    out = subprocess.run(
+        [sys.executable, "-c", _HEAP_PROBE],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert int(out.split()[-1]) <= phys // 2
 
 
 def _exchange_widths(df) -> set[int]:

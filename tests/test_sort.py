@@ -308,7 +308,7 @@ def test_zorder_prunes_at_least_as_well_as_linear(spark):
     """The audit's invariant: under a both-dims box predicate the
     z-layout never scans more rows than the linear layout, and both
     layouts' scanned rows cover all matching rows."""
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     rows = {
         r["layout"]: r

@@ -35,7 +35,7 @@ def test_session_agg_runs(spark):
 def test_stream_dedup(spark):
     stream = streaming.read_events_stream(spark, SF_DIR)
     deduped = streaming.stream_dedup(stream)
-    got = streaming.run_append_to_memory(deduped, "t_dedup")
+    got = streaming.run_to_memory(deduped, "t_dedup", output_mode="append")
     n_events = load_table(spark, "events", SF_DIR).count()
     assert got.count() == n_events  # event_id already unique
     assert got.select("event_id").distinct().count() == n_events
@@ -108,7 +108,7 @@ def test_stateful_totals_tws(spark):
         pytest.skip("google.protobuf not available in this container")
     stream = streaming.read_events_stream(spark, SF_DIR)
     updates = streaming.stateful_running_totals_tws(stream)
-    got = streaming.run_update_to_memory(updates, "t_tws")
+    got = streaming.run_to_memory(updates, "t_tws", output_mode="update")
     final = got.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"), F.max("total_micros").alias("total_micros")
     )
@@ -168,20 +168,48 @@ def test_stream_outer_join_sentinel_flush_drains_state(spark):
     """After the sentinel-driven end-of-stream flush, the join state
     stores must be (near-)empty — only the far-future sentinel rows
     themselves may remain buffered.  A watermark regression that stops
-    bounding the outer-join state shows up here as state_rows_final
-    tracking state_rows_peak instead of collapsing."""
-    from hadoop_20_spark.registry import REGISTRY
+    bounding the outer-join state shows up here as the final batch's
+    state rows tracking the peak instead of collapsing.  State is read
+    off Spark's own progress events, one per micro-batch."""
+    from pyspark.sql.streaming import StreamingQueryListener
 
-    out = REGISTRY["streaming_stream_outer_join"].fn(
-        spark, "/root/testdata/sf0.001"
-    )
+    from hadoop_20_spark.queries import REGISTRY
+
+    rows_by_batch = []
+
+    class StateRows(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if p.name.startswith("q_stream_outer_join_"):
+                rows_by_batch.append(
+                    sum(op.numRowsTotal for op in p.stateOperators)
+                )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = StateRows()
+    spark.streams.addListener(listener)
+    try:
+        out = REGISTRY["streaming_stream_outer_join"].fn(
+            spark, "/root/testdata/sf0.001"
+        )
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
     assert out.count() > 0
-    prog = streaming.LAST_QUERY_PROGRESS
-    assert prog["n_batches"] >= 3  # fixture + 2 sentinel batches
-    assert prog["state_rows_peak"] > 0
+    assert len(rows_by_batch) >= 3  # fixture + 2 sentinel batches
+    peak, final = max(rows_by_batch), rows_by_batch[-1]
+    assert peak > 0
     # flush drained the real rows; at most the sentinels linger
-    assert prog["state_rows_final"] <= 4
-    assert prog["state_rows_final"] < prog["state_rows_peak"]
+    assert final <= 4
+    assert final < peak
 
 
 def test_streaming_incremental_dedup_batch_split_invariant(spark):
@@ -493,7 +521,7 @@ def test_adaptive_state_partitions_sizes_from_bytes(spark, tmp_path):
 
 
 def test_state_partitions_capture_and_conf_restore(spark):
-    """run_append_to_memory(state_partitions=N) must (a) run the
+    """run_to_memory(state_partitions=N) must (a) run the
     stream's stateful operators with exactly N state partitions — the
     cloned stream session captures the lowered shuffle-partitions conf
     at start — and (b) restore the session conf for subsequent batch
@@ -505,8 +533,8 @@ def test_state_partitions_capture_and_conf_restore(spark):
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id")
     )
-    got = streaming.run_append_to_memory(
-        deduped, "t_sp_capture", state_partitions=5
+    got = streaming.run_to_memory(
+        deduped, "t_sp_capture", output_mode="append", state_partitions=5
     )
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     # numShufflePartitions comes from the raw progress, which the run

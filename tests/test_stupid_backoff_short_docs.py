@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 from oracle_check import canonicalize, value_hash  # noqa: E402
 
-from hadoop_20_spark.registry import REGISTRY  # noqa: E402
+from hadoop_20_spark.queries import REGISTRY  # noqa: E402
 
 
 def test_stupid_backoff_short_docs_match_oracle(spark, tmp_path):

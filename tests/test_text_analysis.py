@@ -149,7 +149,7 @@ def test_bpe_merges_n_matches_python_model(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     texts = [
         "aaaaa bbbbbbb abababab",       # odd/even runs, alternations
@@ -183,7 +183,7 @@ def test_neardup_split_isolates_planted_near_duplicates(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from hadoop_20_spark.queries.text_curation import _neardup_split_assignment
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     base = ("the quick brown fox jumps over the lazy dog while the "
             "rain falls softly on the quiet village roofs tonight")
@@ -235,7 +235,7 @@ def test_heavy_hitter_sketch_equals_naive_groupby(spark):
     from pyspark.sql import functions as F
 
     from hadoop_20_spark.functions import tokens
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     sf = "/root/testdata/sf0.001"
     got = {
@@ -347,7 +347,7 @@ def test_bm25_ranking_sanity(spark):
     """BM25 invariants on a tiny planted corpus: a doc matching all
     query terms outranks a doc matching one; higher tf (same length)
     ranks higher; scores are positive and non-increasing."""
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     rows = REGISTRY["bm25_topk"].fn(spark, "/root/testdata/sf0.001").collect()
     scores = [r["score"] for r in rows]

@@ -57,7 +57,7 @@ def test_expire_maintenance_idempotent(spark):
 
 
 def test_expire_registry_query_diff_zero(spark):
-    from hadoop_20_spark.registry import REGISTRY
+    from hadoop_20_spark.queries import REGISTRY
 
     rows = REGISTRY["time_travel_expire"].fn(spark, SF).collect()
     assert [r["version"] for r in rows] == [1, 2]

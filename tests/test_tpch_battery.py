@@ -7,7 +7,7 @@ NOT-IN exclusion (q16), nested-IN dominance (q20) — so the battery is
 the relational-coverage contract, not a benchmark-kit copy.
 """
 
-from hadoop_20_spark.registry import REGISTRY
+from hadoop_20_spark.queries import REGISTRY
 
 BATTERY = {
     1: "q1_pricing_summary",

@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_20_spark import get_spark  # noqa: E402
 from hadoop_20_spark.catalog import TABLES, table_path  # noqa: E402
-from hadoop_20_spark.registry import REGISTRY  # noqa: E402
+from hadoop_20_spark.queries import REGISTRY  # noqa: E402
 
 
 def canonicalize(df: pd.DataFrame) -> pd.DataFrame:

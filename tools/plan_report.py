@@ -16,7 +16,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_20_spark import get_spark  # noqa: E402
-from hadoop_20_spark.registry import REGISTRY  # noqa: E402
+from hadoop_20_spark.queries import REGISTRY  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 

@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_20_spark import get_spark  # noqa: E402
-from hadoop_20_spark.registry import REGISTRY  # noqa: E402
+from hadoop_20_spark.queries import REGISTRY  # noqa: E402
 from plan_report import node_counts  # noqa: E402
 
 SCAN_CAP = 4  # structural FileScans of one source file: <= 4 narrow

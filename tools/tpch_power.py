@@ -16,7 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_20_spark import get_spark  # noqa: E402
-from hadoop_20_spark.registry import REGISTRY  # noqa: E402
+from hadoop_20_spark.queries import REGISTRY  # noqa: E402
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
 from test_tpch_battery import BATTERY  # noqa: E402  (the 22-shape map)
